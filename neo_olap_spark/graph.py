@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neo_olap_spark.tables import load
+from neo_olap_spark.tables import load, parquet_row_count
 
 # Offsets keep the three node-id ranges disjoint. 2^40 apart: a table
 # would need a trillion rows before ranges could collide (1e6-style
@@ -68,13 +68,11 @@ def edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def edge_count_estimate(spark: SparkSession, sf_dir: str) -> int:
     """Cheap upper bound on the symmetrized edge count, for sizing
-    iteration-loop shuffles: 2 × (|orders| + |lineitem|). count() on a
-    bare parquet scan is answered from row-group metadata — no data
-    read, no shuffle (the exact count would cost the order→part
-    distinct, a full shuffle, before the loop even starts)."""
-    n_o = load(spark, sf_dir, "orders").count()
-    n_l = load(spark, sf_dir, "lineitem").count()
-    return 2 * (n_o + n_l)
+    iteration-loop shuffles: 2 × (|orders| + |lineitem|). Both counts
+    come from the parquet footers (tables.parquet_row_count) — no Spark
+    job (the exact count would cost the order→part distinct, a full
+    shuffle, before the loop even starts)."""
+    return 2 * (parquet_row_count(sf_dir, "orders") + parquet_row_count(sf_dir, "lineitem"))
 
 
 def symmetrize(e: DataFrame) -> DataFrame:

@@ -15,11 +15,12 @@ distributed (no driver collect besides scalar counts).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from neo_olap_spark.functions import local_rows_frame, loop_checkpoint
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
@@ -264,34 +265,30 @@ def dense_index(df: DataFrame, col_name: str, n_parts: int | None = None) -> Dat
 
 
 
-def _teleport_address_space(spark: SparkSession, sf_dir: str):
+def _teleport_address_space(sf_dir: str):
     """The teleport address map idx ∈ [0, n_nodes) → node id.
 
     The derived graph's node ids are offset table keys, and TPC-H keys
     are dense 0..n-1 — the same density assumption the reference makes
-    when it rejection-samples node ids (OlapRunner.java:60-69). One
-    metadata-cheap aggregate verifies it, and the map becomes a CLOSED-
-    FORM expression: no node table, no join, no cache. If a table ever
-    arrives non-dense, callers fall back to dense_index() (the
-    distributed rank path).
+    when it rejection-samples node ids (OlapRunner.java:60-69). The
+    parquet footers verify it (row count and key min/max from row-group
+    statistics — no Spark job), and the map becomes a CLOSED-FORM
+    expression: no node table, no join, no cache. If a table ever
+    arrives non-dense, or its footers carry no min/max, callers fall
+    back to dense_index() (the distributed rank path).
 
     Returns (n_nodes, node_of_idx: Column -> Column) or (None, None)
     when the density check fails."""
     from neo_olap_spark.graph import ORDER_OFFSET, PART_OFFSET
+    from neo_olap_spark.tables import parquet_key_range
 
-    tagged = None
-    for t, key in (("customer", "c_custkey"), ("orders", "o_orderkey"), ("part", "p_partkey")):
-        part = load(spark, sf_dir, t).select(F.lit(t).alias("t"), F.col(key).alias("k"))
-        tagged = part if tagged is None else tagged.unionByName(part)
-    stats = {
-        r.t: r
-        for r in tagged.groupBy("t")
-        .agg(F.count("*").alias("n"), F.max("k").alias("mx"), F.min("k").alias("mn"))
-        .collect()
-    }
-    if any(r.mn != 0 or r.mx != r.n - 1 for r in stats.values()):
+    stats = [
+        parquet_key_range(sf_dir, t, key)
+        for t, key in (("customer", "c_custkey"), ("orders", "o_orderkey"), ("part", "p_partkey"))
+    ]
+    if any(mn != 0 or mx != n - 1 for n, mn, mx in stats):
         return None, None
-    nc, no, np_ = (stats[t].n for t in ("customer", "orders", "part"))
+    nc, no, np_ = (n for n, _, _ in stats)
 
     def node_of_idx(ix):
         return (
@@ -337,7 +334,7 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
         .coalesce(8)
         .persist()
     )
-    n_nodes, node_of_idx = _teleport_address_space(spark, sf_dir)
+    n_nodes, node_of_idx = _teleport_address_space(sf_dir)
     if n_nodes is None:
         # non-dense keys: distributed-rank index, join-backed teleport
         tele_nodes = dense_index(nodes_all, "node").persist()
@@ -352,50 +349,64 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
             "walker_id",
         )
         .select("walker_id", "node", F.lit(0).alias("step"))
-        .localCheckpoint()
+        # lazy: the sample materializes inside the walk's first job
+        # instead of running as a job of its own
+        .localCheckpoint(eager=False)
     )
     return adj, (tele_nodes, node_of_idx), n_nodes, walkers
 
 
-def _advance_walkers(
-    frontier: DataFrame,
-    adj: DataFrame,
-    tele,
-    n_nodes: int,
-    seed: int,
-) -> DataFrame:
-    """One walk step for every walker: uniform neighbor pick by hashing
-    (walker, step, seed) into the node's sorted neighbor array; dead
-    ends teleport to a hash-chosen node (RandomWalkingRunner
-    .java:24,31). The tiny frontier is the broadcast build side against
-    the persisted adjacency/node tables — zero shuffles per step.
+class _WalkStep(NamedTuple):
+    """The column expressions of one walk step, built ONCE per walk by
+    _walk_step and shared by every step of both join directions (each
+    F.* call is a Py4J round trip, about 20 of them per step).
 
     The step counter is a COLUMN on the frontier, not a Python literal:
     every step therefore compiles to the identical plan and Spark's
     codegen cache is hit 15 of 16 times. The pick depends only on
     (walker_id, step, seed), so any resumption replays identically."""
-    tele_nodes, node_of_idx = tele
+
+    nstep: Column  # the step number after this step
+    pick: Column  # uniform neighbor: nbrs[pmod(h, size) + 1]
+    tele_idx: Column  # dead-end teleport target index
+    new_node: Column | None  # pick, else the teleport node (dense keys)
+
+
+def _walk_step(node_of_idx, n_nodes: int, seed: int) -> _WalkStep:
     nstep = F.col("step") + 1
     h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
     pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
     tele_idx = F.pmod(h, F.lit(n_nodes))
+    new_node = (
+        None
+        if node_of_idx is None
+        else F.when(F.size("nbrs") > 0, pick).otherwise(node_of_idx(tele_idx))
+    )
+    return _WalkStep(nstep, pick, tele_idx, new_node)
+
+
+def _advance_walkers(
+    frontier: DataFrame,
+    adj: DataFrame,
+    tele_nodes: DataFrame | None,
+    step: _WalkStep,
+) -> DataFrame:
+    """One walk step for every walker: uniform neighbor pick by hashing
+    (walker, step, seed) into the node's sorted neighbor array; dead
+    ends teleport to a hash-chosen node (RandomWalkingRunner
+    .java:24,31). The tiny frontier is the broadcast build side against
+    the persisted adjacency/node tables — zero shuffles per step."""
     joined = adj.join(F.broadcast(frontier), adj.src == frontier.node, "inner")
-    if node_of_idx is not None:
+    if step.new_node is not None:
         # dense keys: dead ends (empty nbrs) teleport via a pure
         # expression — the whole step is ONE broadcast join, one scan
-        return joined.select(
-            "walker_id",
-            F.when(F.size("nbrs") > 0, pick)
-            .otherwise(node_of_idx(tele_idx))
-            .alias("node"),
-            nstep.alias("step"),
-        )
+        return joined.select("walker_id", step.new_node.alias("node"), step.nstep.alias("step"))
     # non-dense fallback: teleport needs the index join
     stepped = joined.where(F.size("nbrs") > 0).select(
-        "walker_id", pick.alias("node"), nstep.alias("step")
+        "walker_id", step.pick.alias("node"), step.nstep.alias("step")
     )
     dead = joined.where(F.size("nbrs") == 0).select(
-        "walker_id", tele_idx.alias("tele_idx"), nstep.alias("step")
+        "walker_id", step.tele_idx.alias("tele_idx"), step.nstep.alias("step")
     )
     teleported = tele_nodes.join(
         F.broadcast(dead), F.col("idx") == F.col("tele_idx"), "inner"
@@ -420,35 +431,23 @@ def _adj_fits_broadcast(spark: SparkSession, n_edges: int, n_nodes: int) -> bool
 
 
 def _advance_walkers_bcast(
-    frontier: DataFrame,
-    adj: DataFrame,
-    node_of_idx,
-    n_nodes: int,
-    seed: int,
+    frontier: DataFrame, adj_b: DataFrame, step: _WalkStep
 ) -> DataFrame:
     """One walk step with the ADJACENCY table as the broadcast build
-    side (dense-key path only): the identical pick/teleport expressions
+    side (dense-key path only; ``adj_b`` is the walk's one
+    ``F.broadcast(adj)`` frame): the identical pick/teleport expressions
     as _advance_walkers, but the streamed side is the walker frontier
     (n_walkers rows) instead of the full adjacency table — so a step
     touches n_walkers rows, not |V|. The walked node is appended to a
     carried ``path`` array, which keeps every frontier referenced
-    exactly ONCE (linear plan, no per-step checkpoint or branch): the
-    whole n_steps walk plus the final explode+count runs as a single
-    job in which Spark's exchange reuse builds the adjacency broadcast
-    once."""
-    nstep = F.col("step") + 1
-    h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
-    pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
-    tele_idx = F.pmod(h, F.lit(n_nodes))
-    new_node = F.when(F.size("nbrs") > 0, pick).otherwise(node_of_idx(tele_idx))
-    return (
-        frontier.join(F.broadcast(adj), frontier.node == adj.src, "inner")
-        .select(
-            "walker_id",
-            new_node.alias("node"),
-            nstep.alias("step"),
-            F.array_append("path", new_node).alias("path"),
-        )
+    exactly ONCE (linear plan, no per-step checkpoint or branch), so
+    Spark's exchange reuse builds the adjacency broadcast once for the
+    whole n_steps walk."""
+    return frontier.join(adj_b, frontier.node == adj_b.src, "inner").select(
+        "walker_id",
+        step.new_node.alias("node"),
+        step.nstep.alias("step"),
+        F.array_append("path", step.new_node).alias("path"),
     )
 
 
@@ -481,6 +480,7 @@ def random_walk_counts(
     n_edges = edge_count_estimate(spark, sf_dir)
     with _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
         adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
+        step = _walk_step(tele[1], n_nodes, seed)
 
         if tele[1] is not None and _adj_fits_broadcast(spark, n_edges, n_nodes):
             # r14 (guide §3.1/§2.4): the walker state is n_walkers rows
@@ -489,20 +489,20 @@ def random_walk_counts(
             # broadcast threshold, flip the join direction: adjacency
             # becomes the (reused) broadcast build side, each step
             # streams only the walker rows, the visit log rides along
-            # as a per-walker path array, and the entire walk +
-            # explode + count executes as ONE job with ONE adjacency
-            # broadcast (exchange reuse) — no per-step checkpoint
+            # as a per-walker path array, and the walk + explode +
+            # count runs 3 jobs (the adjacency shuffle, ONE adjacency
+            # broadcast via exchange reuse, the result; the walker
+            # sample rides inside them) — no per-step checkpoint
             # actions, no per-step scans of the cached adjacency.
             # Above the threshold (or with non-dense keys) the
             # streamed-adjacency loop below is the scale shape:
             # walker state broadcasts, adjacency stays distributed.
             # Identical picks/teleports — value-pinned in tests.
             adj.unpersist()  # built once inside the broadcast exchange
+            adj_b = F.broadcast(adj)
             frontier = walkers.withColumn("path", F.array("node"))
             for _ in range(n_steps):
-                frontier = _advance_walkers_bcast(
-                    frontier, adj, tele[1], n_nodes, seed
-                )
+                frontier = _advance_walkers_bcast(frontier, adj_b, step)
             return (
                 frontier.select(F.explode("path").alias("node"))
                 .groupBy(F.col("node").alias("node_id"))
@@ -518,9 +518,9 @@ def random_walk_counts(
             # coalesce(4): a 256-row frontier checkpointed as ~35
             # micro-partitions per step would hand the final count job
             # n_steps×35 near-empty tasks
-            frontier = loop_checkpoint(_advance_walkers(
-                frontier, adj, tele, n_nodes, seed
-            ).coalesce(4))
+            frontier = loop_checkpoint(
+                _advance_walkers(frontier, adj, tele[0], step).coalesce(4)
+            )
             visit_logs.append(frontier.select("node"))
 
         # the visit logs are localCheckpointed: the adjacency/node caches
@@ -567,6 +567,7 @@ def resumable_random_walk_counts(
         spark, edge_count_estimate(spark, sf_dir)
     ):
         adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
+        step = _walk_step(tele[1], n_nodes, seed)
 
         last = latest_round(ckpt_dir)
         if last is None:
@@ -586,7 +587,7 @@ def resumable_random_walk_counts(
             visit_logs = []
             for _ in range(start_step + 1, end + 1):
                 frontier = _advance_walkers(
-                    frontier, adj, tele, n_nodes, seed
+                    frontier, adj, tele[0], step
                 ).coalesce(4).localCheckpoint()
                 visit_logs.append(frontier.select("node"))
             delta = visit_logs[0]

@@ -359,17 +359,19 @@ def _replay_state_partitions(
     of a stateful operator owns state-store instances whose per-commit
     file cost is fixed, so partitions beyond the data volume buy pure
     overhead). The partition count is chosen ONCE per query from the
-    source's metadata row count (parquet footer — no data read) and
-    clamped to the session default as ceiling, so a 100 TB replay still
-    gets the full session width; a stream's state partitioning is fixed
-    at first start, which is why this must be decided before .start()
-    and why each invocation uses a fresh checkpoint generation.
+    source's row count and clamped to the session default as ceiling,
+    so a 100 TB replay still gets the full session width; a stream's
+    state partitioning is fixed at first start, which is why this must
+    be decided before .start() and why each invocation uses a fresh
+    checkpoint generation.
 
     Same principle as graph_algos._loop_shuffle_partitions: shuffle
     width should track data volume, not a global constant."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    n_rows = spark.read.parquet(events_dir).count()  # metadata-only
+    # two Spark jobs (schema inference, then the count), not a
+    # metadata-only read
+    n_rows = spark.read.parquet(events_dir).count()
     parts = max(2, min(int(prev), n_rows // rows_per_partition + 1))
     spark.conf.set(key, str(parts))
     try:

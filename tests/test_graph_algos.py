@@ -654,3 +654,74 @@ def test_edge_count_hint_releases_cache_on_failure(spark):
     with _edge_count_hint(df, 42) as (same, n):
         assert same is df and n == 42
         assert not df.storageLevel.useMemory
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_walk_and_topn_job_counts(spark, sf_dir):
+    """Pins plan building of the graph loop at zero Spark jobs: table
+    schemas come from the load memo, edge counts and the teleport
+    density check from parquet footers, and the walker sample is a
+    lazy checkpoint. The walk plus its noop sink runs at most 3 jobs
+    (adjacency shuffle, ONE adjacency broadcast, result): 16 un-reused
+    per-step adjacency broadcasts would show up here as extra jobs."""
+    from neo_olap_spark.registry import queries
+
+    qs = queries()
+    for key in ("q_random_walk_counts", "q_topn"):
+        qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
+
+    j0 = _jobs(spark)
+    walk = qs["q_random_walk_counts"](spark, sf_dir)
+    j1 = _jobs(spark)
+    walk.write.format("noop").mode("overwrite").save()
+    j2 = _jobs(spark)
+    qs["q_topn"](spark, sf_dir)
+    j3 = _jobs(spark)
+    assert j1 - j0 == 0, "walk build launched jobs"
+    assert j2 - j0 <= 3, f"walk + sink ran {j2 - j0} jobs"
+    assert j3 - j2 == 0, "q_topn build launched jobs"
+
+
+def _copy_tables(src: str, dst) -> str:
+    import shutil
+
+    from neo_olap_spark.tables import TABLES
+
+    dst.mkdir()
+    for t in TABLES:
+        shutil.copy(f"{src}/{t}.parquet", dst / f"{t}.parquet")
+    return str(dst)
+
+
+def test_teleport_density_gate_both_sides(spark, sf_dir, tmp_path):
+    """The closed-form teleport map needs footer min/max proving dense
+    keys. Without statistics, or with a gap in the keys, the gate must
+    return (None, None) — and the dense_index fallback walk must give
+    rows identical to the dense path."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from neo_olap_spark.operators.graph_algos import _teleport_address_space
+    from neo_olap_spark.tables import parquet_row_count
+
+    n_nodes, node_of_idx = _teleport_address_space(sf_dir)
+    assert node_of_idx is not None
+    assert n_nodes == sum(parquet_row_count(sf_dir, t) for t in ("customer", "orders", "part"))
+
+    nostats = _copy_tables(sf_dir, tmp_path / "nostats")
+    for t in ("customer", "orders", "part"):
+        path = f"{nostats}/{t}.parquet"
+        pq.write_table(pq.read_table(path), path, write_statistics=False)
+    assert _teleport_address_space(nostats) == (None, None)
+    dense = random_walk_counts(spark, sf_dir, n_walkers=32, n_steps=6, seed=5)
+    fallback = random_walk_counts(spark, nostats, n_walkers=32, n_steps=6, seed=5)
+    assert sorted(map(tuple, fallback.collect())) == sorted(map(tuple, dense.collect()))
+
+    gap = _copy_tables(sf_dir, tmp_path / "gap")
+    path = f"{gap}/customer.parquet"
+    cust = pq.read_table(path)
+    pq.write_table(cust.filter(pc.not_equal(cust["c_custkey"], 5)), path)
+    assert _teleport_address_space(gap) == (None, None)

@@ -31,6 +31,12 @@ def test_load_events_on_bare_session(bare_conf, sf_dir):
     ev = load(bare_conf, sf_dir, "events")
     assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
     assert ev.limit(5).count() == 5
+    # again on a session that lost the conf, now with the schema memo
+    # warm: load must re-set the conf before it keys the memo
+    bare_conf.conf.unset(NANOS_CONF)
+    again = load(bare_conf, sf_dir, "events")
+    assert again.schema == ev.schema
+    assert again.select("ts").collect() == ev.select("ts").collect()
 
 
 def test_time_rollup_on_bare_session(bare_conf, sf_dir):
@@ -211,3 +217,44 @@ def test_stream_transform_state_on_bare_session(bare_conf, sf_dir):
     extraction — must run on a session without our builder confs."""
     out = streaming.q_stream_transform_state(bare_conf, sf_dir)
     assert out.count() >= 0
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_load_reuses_inferred_schema_until_file_changes(spark, tmp_path):
+    """tables.load memoizes the schema Spark inferred on the first read:
+    a second load of the unchanged file runs no schema-inference job,
+    and a rewritten file (a column's type changed, a column added) is
+    inferred afresh — never read with the stale schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "customer.parquet"
+    pq.write_table(
+        pa.table({"c_custkey": pa.array([0, 1, 2], pa.int64()),
+                  "c_nationkey": pa.array([7, 8, 9], pa.int64())}),
+        path,
+    )
+    first = load(spark, str(tmp_path), "customer")
+    j0 = _jobs(spark)
+    second = load(spark, str(tmp_path), "customer")
+    assert _jobs(spark) == j0
+    assert second.schema == first.schema
+    assert sorted(map(tuple, second.collect())) == [(0, 7), (1, 8), (2, 9)]
+
+    pq.write_table(
+        pa.table({"c_custkey": pa.array([0, 1], pa.int64()),
+                  "c_nationkey": pa.array(["x", "y"], pa.string()),
+                  "c_phone": pa.array(["p0", "p1"], pa.string())}),
+        path,
+    )
+    third = load(spark, str(tmp_path), "customer")
+    assert [(f.name, f.dataType) for f in third.schema.fields] == [
+        ("c_custkey", T.LongType()),
+        ("c_nationkey", T.StringType()),
+        ("c_phone", T.StringType()),
+    ]
+    assert sorted(map(tuple, third.collect())) == [(0, "x", "p0"), (1, "y", "p1")]
+
